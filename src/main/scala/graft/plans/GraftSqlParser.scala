@@ -971,8 +971,8 @@ case class GraftPathUpdateCommand(target: String,
 /** `MERGE INTO <target> [t] USING <source> [s] ON t.k = s.k [AND …]
   * WHEN ...` — the full conditional-clause MERGE on a path target. The
   * parser already normalized the clause list; the upsert-all shape
-  * (`UPDATE SET * / INSERT *`, both unconditional) lowers onto the tuned
-  * native `merge` (identity/evolution-aware fast path), every other
+  * (`UPDATE SET * / INSERT *`, both unconditional) lowers onto `merge`
+  * (the key-replace action of the one MERGE core), every other
   * combination onto `mergeWhen` with the declared aliases. The source is
   * a table/view name, a parenthesized query, or a quoted PATH — a graft
   * table root (read through the log, snapshot-isolated) or a plain

@@ -278,8 +278,8 @@ case class GraftSqlRule(session: SparkSession) extends Rule[LogicalPlan] {
     *    `WHEN MATCHED THEN UPDATE` + one unconditional `WHEN NOT MATCHED
     *    THEN INSERT` whose assignments agree, cover every target column
     *    and draw only on the source — SET * / INSERT * after star
-    *    expansion) takes the tuned `TxnTable.merge` fast path
-    *    (key-replace, identity/evolution-aware);
+    *    expansion) lowers onto `TxnTable.merge`, the key-replace
+    *    action of the one MERGE core;
     *  - EVERYTHING ELSE — conditional clauses, explicit SET lists,
     *    matched DELETE, conditional inserts, NOT MATCHED BY SOURCE —
     *    lowers onto `TxnTable.mergeWhen`: each clause's condition and

@@ -549,6 +549,52 @@ class TxnSpec extends SparkTestBase {
     assert(ids70.size == 2, s"dup inserts must get distinct ids: $ids70")
   }
 
+  test("upsert merge: two source rows for one matched key both land (no identity)") {
+    val t = TxnTable.fresh(spark, dir("merge_dup_src"))
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    t.merge(Seq((1L, "x"), (1L, "y"), (3L, "c")).toDF("k", "v"), Seq("k"))
+    val rows = t.read().as[(Long, String)].collect().sorted.toSeq
+    assert(rows == Seq((1L, "x"), (1L, "y"), (2L, "b"), (3L, "c")),
+      s"key-replace keeps every source row of a matched key: $rows")
+  }
+
+  test("upsert merge: a key stored in two target rows ends up with exactly the source's rows") {
+    val t = TxnTable.fresh(spark, dir("merge_dup_tgt"))
+    t.append(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("k", "v"))
+    t.merge(Seq((1L, "z")).toDF("k", "v"), Seq("k"))
+    assert(t.read().as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "z"), (2L, "c")))
+    // both sides duplicated: the key's rows become the source's two rows
+    t.append(Seq((2L, "d")).toDF("k", "v"))
+    t.merge(Seq((2L, "x"), (2L, "y")).toDF("k", "v"), Seq("k"))
+    assert(t.read().as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "z"), (2L, "x"), (2L, "y")))
+  }
+
+  test("upsert merge CDC on duplicated keys: one pre-image per target row, one post-image per source row") {
+    val t = TxnTable.fresh(spark, dir("merge_dup_cdc"))
+    t.append(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("k", "v"))
+    t.merge(Seq((1L, "x"), (1L, "y"), (9L, "n")).toDF("k", "v"), Seq("k"),
+      cdc = true)
+    val ch = t.readChanges(t.currentVersion - 1)
+      .select("_change_type", "k", "v").as[(String, Long, String)]
+      .collect().sorted.toSeq
+    assert(ch == Seq(("insert", 9L, "n"),
+      ("update_postimage", 1L, "x"), ("update_postimage", 1L, "y"),
+      ("update_preimage", 1L, "a"), ("update_preimage", 1L, "b")),
+      s"wrong CDC images: $ch")
+  }
+
+  test("upsert merge: a source lacking a key column is refused up front, naming the column") {
+    val t = TxnTable.fresh(spark, dir("merge_no_key"))
+    t.append(Seq((1L, "a")).toDF("k", "v"))
+    val e = intercept[IllegalArgumentException] {
+      t.merge(Seq((1L, "a")).toDF("key", "v"), Seq("k"))
+    }
+    assert(e.getMessage.contains("lacks key column k"), e.getMessage)
+    assert(t.currentVersion == 0L)
+  }
+
   test("restore carries table metadata: identity declared after the target version does not resurrect") {
     val t = TxnTable.fresh(spark, dir("restore_props"))
     t.append(Seq((1L, 10L)).toDF("k", "v"))   // v0
